@@ -98,16 +98,6 @@ class PipelineConfig:
     # Parallelism hint for the salted repartition; None = leave to AQE.
     shuffle_partitions: int | None = None
 
-    # Extraction strategy: "fast" (substring split + anchored charset
-    # checks, exact-regex fallback for structurally odd rows), "native"
-    # (JVM regexp_extract codegen — the full union regex ~10x per row),
-    # or "pandas" (single vectorized Arrow UDF). All three produce
-    # identical results (cross-tested in test_parse/test_property);
-    # round-7 measurement (sf0.1, local[32], min-of-3): native ~2.9s,
-    # fast ~5.3s, pandas ~1.5s on the isolated extraction — native
-    # stays the default (see OPTIMIZATION_r07.md).
-    extraction: str = "native"
-
     def with_(self, **kw) -> "PipelineConfig":
         """Return a copy with the given fields replaced."""
         from dataclasses import replace

@@ -177,7 +177,7 @@ def enrich(df: DataFrame, pods_dim: DataFrame, ns_dim: DataFrame,
     """Full O5-O20 pipeline: extraction -> identity -> broadcast joins ->
     branch when-chains. Adds ENRICHED_COLS (flat, null == omitted) and
     keeps every input column untouched (passthrough semantics)."""
-    df = extract_source_fields(df, source_col=source_col, method=cfg.extraction,
+    df = extract_source_fields(df, source_col=source_col,
                                pods_pattern=cfg.regex_var_log_pods,
                                containers_pattern=cfg.regex_var_log_containers)
     df = resolve_identity(df, cfg)

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -96,15 +95,13 @@ def compile_grok(expr: str, patterns: dict[str, str] | None = None) -> tuple[str
     return regex, gi
 
 
-
-
 def grok_extract(df: DataFrame, source_col: str, expr: str,
                  patterns: dict[str, str] | None = None,
                  prefix: str = "") -> DataFrame:
     """Add one column per grok field (null when the line doesn't match).
 
     Per-field ``when(matched, extract)`` ON PURPOSE (round 7): a staged
-    all-fields struct (the parse.extract_native trick) was measured
+    all-fields struct (the parse.extract_source_fields trick) was measured
     SLOWER here — 1.6 s vs 1.0 s on the sf0.1 logs — because queries
     select a SUBSET of grok fields and column pruning removes unused
     per-field extracts but cannot prune inside a materialized struct,
@@ -126,53 +123,3 @@ APACHE_COMBINED = (
     '"%{WORD:verb} %{URIPATH:request} HTTP/%{NUMBER:httpversion}" '
     '%{INT:response} %{INT:bytes}'
 )
-
-
-def make_grok_pandas_udf(expr: str, patterns: dict[str, str] | None = None):
-    """Vectorized Arrow-batched grok UDF: ONE ``str.extract`` pass per
-    batch returns all fields as a struct (the pandas/Arrow path of the
-    input contract; no per-row Python)."""
-    import pyspark.sql.types as T
-
-    regex, gi = compile_grok(expr, patterns)
-    fields = list(gi)
-    # ONE regex pass per batch: wrap the (all-anonymous-group) pattern
-    # in an outer group, so extract's column 0 is the full match — a
-    # notna there IS "the regex matched" (an empty match extracts "",
-    # still notna), and every field group shifts by exactly +1. A
-    # separate str.contains would run the engine a second time over
-    # every line of every batch — grok is the parse hot path.
-    outer = re.compile(f"({regex})")
-    schema = T.StructType(
-        [T.StructField(f, T.StringType()) for f in fields]
-        + [T.StructField("grok_matched", T.BooleanType())]
-    )
-
-    @F.pandas_udf(schema)
-    def gk(s: pd.Series) -> pd.DataFrame:
-        s = s.astype("string")
-        ex = s.str.extract(outer)  # col 0 = full match; groups shifted +1
-        out = {}
-        for f in fields:
-            col = ex[gi[f]].astype(object)
-            out[f] = col.where(col.notna(), None)
-        # matched = the regex itself matched the line (same re.search
-        # semantics as the JVM path's rlike; null line -> null). NOT a
-        # first-field-notna proxy: a field group that participates with
-        # an empty/absent match would mis-report the whole line.
-        m = ex[0].notna().astype(object)
-        out["grok_matched"] = m.where(s.notna(), None)
-        return pd.DataFrame(out)
-
-    return gk
-
-
-def grok_extract_pandas(df: DataFrame, source_col: str, expr: str,
-                        patterns: dict[str, str] | None = None,
-                        prefix: str = "") -> DataFrame:
-    udf = make_grok_pandas_udf(expr, patterns)
-    df = df.withColumn("_g", udf(F.col(source_col)))
-    regexed, gi = compile_grok(expr, patterns)
-    for f in list(gi) + ["grok_matched"]:
-        df = df.withColumn(prefix + f, F.col(f"_g.{f}"))
-    return df.drop("_g")

@@ -231,16 +231,15 @@ def incremental_dedup(batch: DataFrame, seen: DataFrame,
     Returns the surviving batch rows with ``fingerprint_col`` attached
     for appending to the history.
 
-    ``bloom`` (a ``build_seen_bloom`` summary of the history) splits
-    the batch after the keeper window: rows the bloom clears are
-    DEFINITELY new (no false negatives) and bypass the anti-join; only
-    bloom-positive rows — the true-dup fraction plus ~fpp of the rest
-    — are exactly anti-joined. Identical output, but the history table
-    is probed by a few-hundred-KB broadcast instead of feeding a join
-    with the whole batch on the other side; at a mostly-novel daily
-    crawl the anti-join input drops by ~the novelty rate. The two
-    branches share the keeper window's exchange (reused subtree), so
-    the shuffle count is unchanged.
+    ``bloom`` (a ``build_seen_bloom`` summary of the history) is probed
+    once per batch row after the keeper window and its verdict rides
+    inside the anti-join condition: a bloom-cleared row (DEFINITELY
+    new — no false negatives) can never satisfy the condition, so it
+    survives untouched; bloom-positive rows — the true-dup fraction
+    plus ~fpp of the rest — get the exact fingerprint anti-join.
+    Identical output to the bloom-less path, in one pass: the equi key
+    still drives a hash/sort-merge join and the keeper window's
+    partitioning is reused, so the shuffle count is unchanged.
 
     ``seen_buckets`` is the layout contract for a BUCKETED history
     (``bucketing.write_bucketed(seen, table, [fingerprint_col],

@@ -10,27 +10,20 @@ branches have disjoint literal prefixes (var.log.pods vs
 var.log.containers) so ordering only matters for pathological tags, where
 we preserve the reference's PODS-first order.
 
-Two execution strategies, identical results (tested against each other):
-
-- ``native``: ``F.regexp_extract`` per group — stays inside whole-stage
-  codegen, zero Python. Group indices are computed programmatically from
-  the pattern via Python ``re`` so they can never drift from the pattern.
-- ``pandas``: one vectorized pandas UDF over Arrow batches using
-  ``pd.Series.str.extract`` (named groups, one regex pass per branch per
-  batch). No per-row Python anywhere.
+One execution strategy: ``F.regexp_extract`` per group over the JVM-side
+pattern, so the parse stays inside whole-stage codegen with no Python
+worker at all. Group indices are computed programmatically from the
+pattern via Python ``re`` so they can never drift from the pattern.
 
 At 100 TB the extraction is embarrassingly parallel and pipelined into
-the scan; neither path shuffles.
+the scan; it never shuffles.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 
 # Verbatim semantics of filter_kubernetes_metadata.rb:57-58 (named-group
@@ -45,6 +38,10 @@ REGEX_VAR_LOG_CONTAINERS = (
     r"(?<pod_name>[a-z0-9]([-a-z0-9]*[a-z0-9])?(\.[a-z0-9]([-a-z0-9]*[a-z0-9])?)*)_"
     r"(?<namespace>[^_]+)_(?<container_name>.+)-(?<docker_id>[a-z0-9]{64})\.log$"
 )
+# Literal prefixes embedded in the two patterns above; a contains() on
+# them is a necessary condition for a match.
+_PODS_PREFIX = "var.log.pods."
+_CONT_PREFIX = "var.log.containers."
 
 # Columns produced by extraction. x_ prefix = "extracted".
 EXTRACTED_COLS = [
@@ -75,28 +72,29 @@ def _java_pattern(pattern: str) -> str:
     return re.sub(r"\(\?<([A-Za-z_][A-Za-z0-9_]*)>", "(", pattern)
 
 
-def _native_branch(col: Column, pattern: str, names: list[str]) -> dict[str, Column]:
+def _branch_extracts(col: Column, pattern: str, names: list[str]) -> dict[str, Column]:
     gi = group_index(pattern)
     jp = _java_pattern(pattern)
     return {n: F.regexp_extract(col, jp, gi[n]) for n in names if n in gi}
 
 
-def extract_native(df: DataFrame, source_col: str = "tool",
-                   pods_pattern: str | None = None,
-                   containers_pattern: str | None = None) -> DataFrame:
-    """JVM-side extraction. Adds EXTRACTED_COLS; null = group absent.
+def extract_source_fields(df: DataFrame, source_col: str = "tool",
+                          pods_pattern: str | None = None,
+                          containers_pattern: str | None = None) -> DataFrame:
+    """O5+O6: run the tag regexes over ``source_col`` adding
+    EXTRACTED_COLS; null = group absent.
 
     All six outputs come from ONE staged struct per row, so each branch
     RLIKE evaluates once per row instead of once per output column (the
     per-column formulation ran the union regex up to 12x/row — measured
     2.8s -> 1.6s at sf0.1 on the isolated extraction; the non-cheap
     multi-referenced ``_xs`` alias blocks CollapseProject from
-    re-inlining, the same staging contract as ``extract_fast``). Each
-    branch RLIKE is additionally guarded by a ``contains()`` on the
-    branch's literal prefix — a NECESSARY condition for a match when
-    the pattern embeds that literal — so passthrough rows (no k8s tag)
-    skip the backtracking regexes entirely. Custom patterns get no
-    contains guard (their required literals are unknown)."""
+    re-inlining it). Each branch RLIKE is additionally guarded by a
+    ``contains()`` on the branch's literal prefix — a NECESSARY
+    condition for a match when the pattern embeds that literal — so
+    passthrough rows (no k8s tag) skip the backtracking regexes
+    entirely. Custom patterns get no contains guard (their required
+    literals are unknown)."""
     pp = pods_pattern or REGEX_VAR_LOG_PODS
     cp = containers_pattern or REGEX_VAR_LOG_CONTAINERS
     src = F.col(source_col)
@@ -106,8 +104,8 @@ def extract_native(df: DataFrame, source_col: str = "tool",
         pods_m = F.contains(src, F.lit(_PODS_PREFIX)) & pods_m
     if containers_pattern is None:
         cont_m = F.contains(src, F.lit(_CONT_PREFIX)) & cont_m
-    p = _native_branch(src, pp, ["namespace", "pod_name", "container_name", "pod_uuid"])
-    c = _native_branch(src, cp, ["namespace", "pod_name", "container_name", "docker_id"])
+    p = _branch_extracts(src, pp, ["namespace", "pod_name", "container_name", "pod_uuid"])
+    c = _branch_extracts(src, cp, ["namespace", "pod_name", "container_name", "docker_id"])
     null = F.lit(None).cast("string")
 
     def fields(vals: dict[str, Column]) -> Column:
@@ -136,77 +134,6 @@ def extract_native(df: DataFrame, source_col: str = "tool",
         if name != "x_branch":
             df = df.withColumn(name, F.col(f"_xs.{name}"))
     return df.drop("_xs")
-
-
-_EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("x_namespace", T.StringType()),
-        T.StructField("x_pod_name", T.StringType()),
-        T.StructField("x_container_name", T.StringType()),
-        T.StructField("x_pod_uuid", T.StringType()),
-        T.StructField("x_docker_id", T.StringType()),
-        T.StructField("x_branch", T.StringType()),
-    ]
-)
-
-
-def make_extract_pandas_udf(pods_pattern: str | None = None,
-                            containers_pattern: str | None = None):
-    """Vectorized Arrow-batched extraction UDF (input_hint: pandas UDFs,
-    no per-row Python). One ``str.extract`` pass per branch per batch."""
-    pp = _pyre(pods_pattern or REGEX_VAR_LOG_PODS)
-    cp = _pyre(containers_pattern or REGEX_VAR_LOG_CONTAINERS)
-
-    @F.pandas_udf(_EXTRACT_SCHEMA)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        s = s.astype("string")
-        pe = s.str.extract(pp)
-        ce = s.str.extract(cp)
-        pods_m = pe["namespace"].notna()
-        cont_m = ce["namespace"].notna() & ~pods_m
-        out = pd.DataFrame(
-            {
-                "x_namespace": pe["namespace"].where(pods_m, ce["namespace"].where(cont_m)),
-                "x_pod_name": pe["pod_name"].where(pods_m, ce["pod_name"].where(cont_m)),
-                "x_container_name": pe["container_name"].where(
-                    pods_m, ce["container_name"].where(cont_m)
-                ),
-                "x_pod_uuid": pe["pod_uuid"].where(pods_m),
-                "x_docker_id": ce["docker_id"].where(cont_m),
-                "x_branch": pd.Series("pods", index=s.index, dtype="string")
-                .where(pods_m)
-                .where(~cont_m, "containers"),
-            }
-        )
-        return out.astype(object).where(out.notna(), None)
-
-    return extract
-
-
-def extract_pandas(df: DataFrame, source_col: str = "tool",
-                   pods_pattern: str | None = None,
-                   containers_pattern: str | None = None) -> DataFrame:
-    udf = make_extract_pandas_udf(pods_pattern, containers_pattern)
-    st = udf(F.col(source_col)).alias("_x")
-    df = df.withColumn("_x", st)
-    for c in EXTRACTED_COLS:
-        df = df.withColumn(c, F.col(f"_x.{c}"))
-    return df.drop("_x")
-
-
-def extract_source_fields(df: DataFrame, source_col: str = "tool",
-                          method: str = "native",
-                          pods_pattern: str | None = None,
-                          containers_pattern: str | None = None) -> DataFrame:
-    """O5+O6: run the tag regexes over ``source_col`` adding EXTRACTED_COLS."""
-    if method == "pandas":
-        return extract_pandas(df, source_col, pods_pattern, containers_pattern)
-    if method == "fast":
-        if pods_pattern or containers_pattern:
-            # custom patterns have no structural fast path — use regex
-            return extract_native(df, source_col, pods_pattern, containers_pattern)
-        return extract_fast(df, source_col)
-    return extract_native(df, source_col, pods_pattern, containers_pattern)
 
 
 def resolve_identity(df: DataFrame, cfg) -> DataFrame:
@@ -272,146 +199,3 @@ def resolve_identity(df: DataFrame, cfg) -> DataFrame:
         .withColumn("i_docker_id", did)
         .withColumn("i_matched", matched)
     )
-
-
-# ---------------------------------------------------------------- fast path
-
-# Anchored component validators — short strings, no global backtracking.
-_POD_NAME_RX = r"^[a-z0-9]([-a-z0-9]*[a-z0-9])?(\.[a-z0-9]([-a-z0-9]*[a-z0-9])?)*$"
-_HEX64_RX = r"^[a-z0-9]{64}$"
-_UUID_RX = r"^[a-z0-9-]*$"
-
-_CONT_PREFIX = "var.log.containers."
-_PODS_PREFIX = "var.log.pods."
-
-
-def extract_fast(df: DataFrame, source_col: str = "tool") -> DataFrame:
-    """Split-based extraction with regex fallback (identical results to
-    ``extract_native`` — property- and corpus-tested).
-
-    The union regex costs ~10 pattern executions per row and Java regex
-    is the scaling bottleneck (branchy backtracking starves SMT siblings;
-    see BASELINE.md). For tags that start with the literal prefixes —
-    every real fluentd tag — the fields are delimited deterministically:
-
-      var.log.containers.<pod>_<ns>_<container>-<64hex>.log
-        pod  = up to 1st '_'   (pod charset excludes '_')
-        ns   = up to 2nd '_'   ([^_]+)
-        tail = container '-' hex64 '.log'  (greedy .+ == last such split)
-      var.log.pods.<ns>_<pod>_<uuid>.<container>.<n>.log
-        uuid = up to 1st '.' after pod  ([a-z0-9-]* excludes '.')
-        container = tail minus its last two '.'-segments (greedy .+
-        against \\..*\\.log$ ends at the second-to-last dot)
-
-    so the whole parse is substrings + short anchored charset checks.
-    Rows that fail the structural checks (garbage, adversarial prefixes,
-    mid-string matches) fall back to the exact reference regexes — the
-    fast path never changes semantics, only the evaluation strategy.
-    """
-    src = F.col(source_col)
-
-    # ---- containers branch (filter:58)
-    c_body = F.expr(f"substring({source_col}, {len(_CONT_PREFIX) + 1})")
-    c_i1 = F.instr(c_body, "_")
-    c_pod = F.substring(c_body, F.lit(1), c_i1 - 1)
-    c_rest1 = F.expr(f"substring(substring({source_col}, {len(_CONT_PREFIX) + 1}), instr(substring({source_col}, {len(_CONT_PREFIX) + 1}), '_') + 1)")
-    c_i2 = F.instr(c_rest1, "_")
-    c_ns = F.substring(c_rest1, F.lit(1), c_i2 - 1)
-    c_rest2 = F.substring(c_rest1, c_i2 + 1, F.lit(1 << 30))
-    c_len = F.length(c_rest2)
-    c_container = F.substring(c_rest2, F.lit(1), c_len - 69)
-    c_docker = F.substring(c_rest2, c_len - 67, F.lit(64))
-    c_fast_ok = (
-        src.startswith(_CONT_PREFIX)
-        & (c_i1 > 0)
-        & (c_i2 > 0)
-        & (c_len >= 70)
-        & (F.substring(c_rest2, c_len - 68, F.lit(1)) == "-")
-        & c_rest2.endswith(".log")
-        & c_pod.rlike(_POD_NAME_RX)
-        & c_docker.rlike(_HEX64_RX)
-        & (c_ns != "")
-    )
-
-    # ---- pods branch (filter:57)
-    p_body = F.expr(f"substring({source_col}, {len(_PODS_PREFIX) + 1})")
-    p_i1 = F.instr(p_body, "_")
-    p_ns = F.substring(p_body, F.lit(1), p_i1 - 1)
-    p_rest1 = F.substring(p_body, p_i1 + 1, F.lit(1 << 30))
-    p_i2 = F.instr(p_rest1, "_")
-    p_pod = F.substring(p_rest1, F.lit(1), p_i2 - 1)
-    p_rest2 = F.substring(p_rest1, p_i2 + 1, F.lit(1 << 30))
-    p_i3 = F.instr(p_rest2, ".")
-    p_uuid = F.substring(p_rest2, F.lit(1), p_i3 - 1)
-    p_tail = F.substring(p_rest2, p_i3 + 1, F.lit(1 << 30))
-    p_last2 = F.substring_index(p_tail, ".", -2)
-    p_container = F.substring(p_tail, F.lit(1), F.length(p_tail) - F.length(p_last2) - 1)
-    p_ndots = F.length(p_tail) - F.length(F.replace(p_tail, F.lit("."), F.lit("")))
-    p_fast_ok = (
-        src.startswith(_PODS_PREFIX)
-        & (p_i1 > 0)
-        & (p_i2 > 0)
-        & (p_i3 > 0)
-        & (p_ns != "")
-        & p_pod.rlike(_POD_NAME_RX)
-        & p_uuid.rlike(_UUID_RX)
-        & (p_ndots >= 2)
-        & p_tail.endswith("log")
-        & (F.substring_index(p_tail, ".", -1) == "log")
-        & (p_container != "")
-    )
-
-    # ---- fallback: the exact reference regexes, evaluated ONLY for rows
-    # the fast path rejects (codegen CASE short-circuits per row). Each
-    # regex is guarded by a contains() on its literal prefix — a
-    # NECESSARY condition for a match (the pattern embeds the literal),
-    # so semantics are unchanged, but passthrough rows (no k8s tag at
-    # all) skip the expensive backtracking regexes entirely.
-    pp, cp = REGEX_VAR_LOG_PODS, REGEX_VAR_LOG_CONTAINERS
-    rx_pods = F.contains(src, F.lit(_PODS_PREFIX)) & src.rlike(_java_pattern(pp))
-    rx_cont = F.contains(src, F.lit(_CONT_PREFIX)) & src.rlike(_java_pattern(cp))
-    p_rx = _native_branch(src, pp, ["namespace", "pod_name", "container_name", "pod_uuid"])
-    c_rx = _native_branch(src, cp, ["namespace", "pod_name", "container_name", "docker_id"])
-
-    # Build ONE struct so every subexpression appears exactly once in the
-    # plan; per-column construction would inline these chains 6x and blow
-    # the generated method past the JIT limit (measured: 5x slowdown from
-    # interpreted fallback). CollapseProject keeps a non-cheap multi-
-    # referenced alias materialized, so the struct is computed once/row.
-    null = F.lit(None).cast("string")
-
-    def fields(ns, pod, cn, uuid, did, br):
-        return F.struct(
-            ns.alias("x_namespace"),
-            pod.alias("x_pod_name"),
-            cn.alias("x_container_name"),
-            uuid.alias("x_pod_uuid"),
-            did.alias("x_docker_id"),
-            br.alias("x_branch"),
-        )
-
-    # PODS precedence first (filter:66-67); fast branch, then regex
-    # fallback — the regexes run only for rows the fast checks reject.
-    xs = (
-        F.when(p_fast_ok, fields(p_ns, p_pod, p_container, p_uuid, null, F.lit("pods")))
-        .when(
-            rx_pods,
-            fields(
-                p_rx["namespace"], p_rx["pod_name"], p_rx["container_name"],
-                p_rx["pod_uuid"], null, F.lit("pods"),
-            ),
-        )
-        .when(c_fast_ok, fields(c_ns, c_pod, c_container, null, c_docker, F.lit("containers")))
-        .when(
-            rx_cont,
-            fields(
-                c_rx["namespace"], c_rx["pod_name"], c_rx["container_name"],
-                null, c_rx["docker_id"], F.lit("containers"),
-            ),
-        )
-        .otherwise(fields(null, null, null, null, null, null))
-    )
-    df = df.withColumn("_xs", xs)
-    for c in EXTRACTED_COLS:
-        df = df.withColumn(c, F.col(f"_xs.{c}"))
-    return df.drop("_xs")

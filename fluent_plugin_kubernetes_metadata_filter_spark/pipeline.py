@@ -9,7 +9,6 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
@@ -19,6 +18,7 @@ from fluent_plugin_kubernetes_metadata_filter_spark.enrich import (
     enrich,
 )
 from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table, write_routed
+from fluent_plugin_kubernetes_metadata_filter_spark.metrics import PipelineStats
 from fluent_plugin_kubernetes_metadata_filter_spark.route import (
     PASSTHROUGH,
     per_sink_counts,
@@ -40,11 +40,16 @@ def enrich_transcripts(spark: SparkSession, sf_dir: str,
 
 
 def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
-                  cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
-    """Frame-level composition shared by the sandbox and cluster entry
-    points — ONE definition of the output contract (pruned emit shape:
-    input cols + turn_seq + assembled structs; no scratch columns) and
-    ONE shuffle plan, whatever the source."""
+                  cfg: PipelineConfig = PipelineConfig(), *,
+                  stats: PipelineStats | None = None) -> DataFrame:
+    """Frame-level composition shared by every entry point — ONE
+    definition of the output contract (pruned emit shape: input cols +
+    turn_seq + assembled structs; no scratch columns) and ONE shuffle
+    plan, whatever the source.
+
+    ``stats`` attaches the reference-vocabulary counters to the same DAG
+    (no extra pass); they read ``i_matched``/``i_full``, so they go on
+    before the pruning select drops those columns."""
     # Order of operations is chosen by shuffle VOLUME:
     # 1. stable_order on the RAW input — the conv_id window shuffles only
     #    the 6 narrow input columns, not the enriched width;
@@ -56,6 +61,8 @@ def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
     df = stable_order(src)
     df = enrich(df, pods, ns, cfg)
     df = assemble_structs(df)
+    if stats is not None:
+        df = stats.attach(df)
     keep = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
     df = df.select(*keep)
     if not cfg.route_exchange:
@@ -97,15 +104,7 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
                 counts, "sink string, n_rows bigint"
             ).orderBy("sink")
         back = spark.read.parquet(out_dir)
-        return (
-            back.groupBy(
-                F.coalesce(
-                    F.col(cfg.route_column).cast("string"), F.lit(PASSTHROUGH)
-                ).alias("sink")
-            )
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .orderBy("sink")
-        )
+        return per_sink_counts(back, cfg.route_column).orderBy("sink")
     return per_sink_counts(df, cfg.route_column).orderBy("sink")
 
 
@@ -170,21 +169,16 @@ def run_resumable(spark: SparkSession, sf_dir: str, out_dir: str,
         resumable_fanout_write,
     )
     from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir
-    from fluent_plugin_kubernetes_metadata_filter_spark.metrics import PipelineStats
 
     snapshot = input_snapshot_id(spark, aux_dir(sf_dir))
-    df = load_table(spark, sf_dir, "transcripts")
-    df = stable_order(df)
-    pods = load_table(spark, sf_dir, "pods_dim")
-    ns = load_table(spark, sf_dir, "namespaces_dim")
-    df = enrich(df, pods, ns, cfg)
     stats = PipelineStats()
-    df = stats.attach(df)
-    df = assemble_structs(df)
-    keep = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
-    df = df.select(*keep)
-    if cfg.route_exchange:
-        df = route_partition(df, cfg, cfg.route_column)
+    df = routed_frames(
+        load_table(spark, sf_dir, "transcripts"),
+        load_table(spark, sf_dir, "pods_dim"),
+        load_table(spark, sf_dir, "namespaces_dim"),
+        cfg,
+        stats=stats,
+    )
     manifest = LineageManifest(manifest_dir)
     written = resumable_fanout_write(df, out_dir, manifest, snapshot, cfg.route_column)
     return {

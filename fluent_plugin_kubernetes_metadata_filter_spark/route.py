@@ -12,15 +12,13 @@ fan-outs by tag (README.md:104-110) and counts per-path stats
   (conv_id, salt) where salt = xxhash64(conv_id, turn_idx) % S. The salt
   affects ONLY placement: output content is unchanged and per-conversation
   order is re-established logically by the (conv_id, turn_idx) window
-  sort, so per-turn text equality with the reference holds exactly;
-- observe() metrics give the counter semantics of O22 without a second
-  pass over the data.
+  sort, so per-turn text equality with the reference holds exactly.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 
 from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
 
@@ -69,23 +67,14 @@ def stable_order(df: DataFrame) -> DataFrame:
 
 
 def per_sink_counts(df: DataFrame, route_column: str = "namespace_name") -> DataFrame:
-    """O4/O22 routed-count aggregate; null route = passthrough sink."""
+    """O4/O22 routed-count aggregate; null route = passthrough sink.
+
+    The string cast is a no-op on the enriched frame and keeps sink
+    labels strings when counting a written output read back with hive
+    partition discovery (which infers numeric types for numeric-looking
+    route values)."""
+    sink = F.col(route_column).cast("string")
     return (
-        df.groupBy(F.coalesce(F.col(route_column), F.lit(PASSTHROUGH)).alias("sink"))
+        df.groupBy(F.coalesce(sink, F.lit(PASSTHROUGH)).alias("sink"))
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
-
-
-def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """Counter semantics of kubernetes_metadata_stats.rb:26-45 via
-    ``observe`` — computed inline with whatever action consumes the
-    DataFrame, no extra job. Delegates to metrics._counters so each
-    counter has exactly ONE definition (an earlier inline copy counted
-    pod_enriched as count(pod_id), which also includes as-of-accepted
-    rows whose pod_id is only the tag cache key — diverging from the
-    i_full-based definition the pipeline reports)."""
-    from fluent_plugin_kubernetes_metadata_filter_spark.metrics import _counters
-
-    obs = Observation("k8s_meta_stats")
-    df = df.observe(obs, *[v.alias(k) for k, v in _counters().items()])
-    return df, obs

@@ -17,7 +17,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT = [
     "enrich_flat", "parse_containers", "route_counts", "per_conv_stats",
     "dedup_pipeline", "dedup_keepers", "minhash_pairs", "simhash_pairs",
-    "full_curation", "dsir_weights", "semantic_dedup",
+    "full_curation", "dsir_weights", "semantic_dedup", "enrich_route_write",
 ]
 
 

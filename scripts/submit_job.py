@@ -42,7 +42,6 @@ def main(argv=None):
     ap.add_argument("--salt-buckets", type=int, default=8)
     args = ap.parse_args(argv)
 
-    import pyspark.sql.functions as F
     from pyspark.sql import SparkSession
 
     from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
@@ -52,11 +51,8 @@ def main(argv=None):
         input_snapshot_id,
         resumable_fanout_write,
     )
-    from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir
-    from fluent_plugin_kubernetes_metadata_filter_spark.route import (
-        PASSTHROUGH,
-        per_sink_counts,
-    )
+    from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir, write_routed
+    from fluent_plugin_kubernetes_metadata_filter_spark.route import per_sink_counts
 
     spark = SparkSession.builder.appName("k8s-meta-enrich-route").getOrCreate()
     cfg = PipelineConfig(salt_buckets=args.salt_buckets)
@@ -87,16 +83,11 @@ def main(argv=None):
         # counts read back from the WRITTEN partitions (metadata-cheap):
         # a per_sink_counts over the unwritten frame would execute the
         # whole scan->enrich DAG a second time
-        df.write.mode("overwrite").partitionBy(cfg.route_column).parquet(args.output)
+        write_routed(df, args.output, cfg.route_column)
         back = spark.read.parquet(args.output)
-        counts = {
-            r.sink: r.n_rows
-            for r in back.groupBy(
-                F.coalesce(F.col(cfg.route_column).cast("string"), F.lit(PASSTHROUGH)).alias("sink")
-            ).agg(F.count(F.lit(1)).alias("n_rows")).collect()
-        }
+        counts = {r.sink: r.n_rows for r in per_sink_counts(back, cfg.route_column).collect()}
     else:
-        counts = {r.sink: r.n_rows for r in per_sink_counts(df).collect()}
+        counts = {r.sink: r.n_rows for r in per_sink_counts(df, cfg.route_column).collect()}
 
     import fluent_plugin_kubernetes_metadata_filter_spark as pkg
 

@@ -92,3 +92,24 @@ def test_run_resumable_end_to_end(spark, tmp_path):
     # resume: same snapshot -> nothing rewritten
     r2 = pipeline.run_resumable(spark, "/root/testdata/sf0.001", out, man)
     assert r2["lineage"] == [] and r2["input_snapshot"] == r1["input_snapshot"]
+
+
+def test_run_and_run_resumable_write_same_rows(spark, tmp_path):
+    """Both entry points compose through pipeline.routed_frames: the
+    rows they write are the same multiset, and run_resumable's counters
+    are attached exactly once (events_total == rows written)."""
+    from collections import Counter
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    pipeline.run(spark, SF, out_dir=a)
+    r = pipeline.run_resumable(spark, SF, b, str(tmp_path / "manifest"))
+
+    cols = ["namespace_name", "conv_id", "turn_seq", "text",
+            "kubernetes_meta.pod_id", "docker_meta.container_id"]
+
+    def rows(out):
+        return Counter(tuple(x) for x in spark.read.parquet(out).select(*cols).collect())
+
+    written = rows(a)
+    assert written == rows(b)
+    assert r["stats"]["events_total"] == sum(written.values()) == sum(r["counts"].values())

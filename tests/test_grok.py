@@ -69,24 +69,10 @@ def test_grok_apache_on_generated_logs(spark):
     assert bad.verb is None
 
 
-def test_grok_pandas_equals_native(spark):
-    from fluent_plugin_kubernetes_metadata_filter_spark.grok import grok_extract_pandas
-
-    logs = load_table(spark, SF, "logs")
-    cols = ["log_id", "clientip", "verb", "request", "response", "bytes", "grok_matched"]
-    a = grok_extract(logs, "line", APACHE_COMBINED).select(*cols)
-    b = grok_extract_pandas(logs, "line", APACHE_COMBINED).select(*cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_grok_matched_not_a_first_field_proxy(spark):
     """An expression whose first field participates with an EMPTY match
     (DATA at line start) and null input lines: grok_matched must come
-    from the full regex match on both paths, not first-field
-    non-nullness."""
-    from fluent_plugin_kubernetes_metadata_filter_spark.grok import grok_extract_pandas
-
+    from the full regex match, not first-field non-nullness."""
     expr = "%{DATA:pre}=%{INT:num}"
     df = spark.createDataFrame(
         [(1, "=5"), (2, "key=42"), (3, "no equals here"), (4, None)],
@@ -94,10 +80,8 @@ def test_grok_matched_not_a_first_field_proxy(spark):
     )
     cols = ["id", "pre", "num", "grok_matched"]
     a = grok_extract(df, "line", expr).select(*cols)
-    b = grok_extract_pandas(df, "line", expr).select(*cols)
     rows = {r.id: r for r in a.collect()}
     assert rows[1].grok_matched is True and rows[1].pre == "" and rows[1].num == "5"
     assert rows[2].grok_matched is True and rows[2].num == "42"
     assert rows[3].grok_matched is False and rows[3].num is None
     assert rows[4].grok_matched is None
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))

@@ -25,17 +25,19 @@ from tests.conftest import (
     transcript,
 )
 
+PY_PODS = re.compile(REGEX_VAR_LOG_PODS.replace("(?<", "(?P<"))
+PY_CONT = re.compile(REGEX_VAR_LOG_CONTAINERS.replace("(?<", "(?P<"))
 
-def _extract(spark, tag, method="native"):
-    df = extract_source_fields(transcript(spark, tag), method=method)
+
+def _extract(spark, tag):
+    df = extract_source_fields(transcript(spark, tag))
     return df.select(
         "x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch"
     ).collect()[0]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_containers_tag(spark, method):
-    r = _extract(spark, TAG_CONTAINERS, method)
+def test_containers_tag(spark):
+    r = _extract(spark, TAG_CONTAINERS)
     assert r.x_namespace == "default"
     assert r.x_pod_name == POD_NAME
     assert r.x_container_name == CONTAINER
@@ -44,9 +46,8 @@ def test_containers_tag(spark, method):
     assert r.x_branch == "containers"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_pods_tag(spark, method):
-    r = _extract(spark, TAG_PODS, method)
+def test_pods_tag(spark):
+    r = _extract(spark, TAG_PODS)
     assert r.x_namespace == "default"
     assert r.x_pod_name == POD_NAME
     assert r.x_container_name == CONTAINER
@@ -55,19 +56,17 @@ def test_pods_tag(spark, method):
     assert r.x_branch == "pods"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_dotted_pod_name(spark, method):
+def test_dotted_pod_name(spark):
     # test_filter_kubernetes_metadata.rb:560-584
     tag = f"var.log.containers.fabric8-console-controller.98rqc_default_{CONTAINER}-{DOCKER_ID}.log"
-    r = _extract(spark, tag, method)
+    r = _extract(spark, tag)
     assert r.x_pod_name == "fabric8-console-controller.98rqc"
     assert r.x_namespace == "default"
 
 
 @pytest.mark.parametrize("tag", ["non-kubernetes", "", "var.log.containers.malformed"])
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_non_matching(spark, tag, method):
-    r = _extract(spark, tag, method)
+def test_non_matching(spark, tag):
+    r = _extract(spark, tag)
     assert r.x_branch is None
     assert r.x_namespace is None
 
@@ -96,20 +95,6 @@ def test_cache_key_selection(spark):
     assert d2.select("i_cache_key").collect()[0][0] == DOCKER_ID
 
 
-def test_all_strategies_equal_on_corpus(spark):
-    """All three strategies must agree on generated data (sf0.001 corpus)."""
-    from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table
-
-    df = load_table(spark, "/root/testdata/sf0.001", "transcripts").limit(2000)
-    a = extract_source_fields(df, method="native").select(
-        "conv_id", "turn_idx", *[c for c in ("x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch")]
-    )
-    for other in ("pandas", "fast"):
-        b = extract_source_fields(df, method=other).select(*a.columns)
-        assert a.exceptAll(b).count() == 0, other
-        assert b.exceptAll(a).count() == 0, other
-
-
 ADVERSARIAL = [
     "", "non-kubernetes", "var.log.containers.", "var.log.pods.",
     "var.log.containers.pod_ns_c-" + "a" * 64 + ".log",
@@ -129,18 +114,49 @@ ADVERSARIAL = [
 ]
 
 
-def test_fast_equals_native_on_adversarial(spark):
-    """The split-based fast path must agree with the reference regex on
-    malformed / pathological tags (where it falls back to the regex)."""
+def _python_re_fields(tag):
+    """Ground truth: the reference patterns under Python ``re``, PODS
+    branch first like the reference's union regex (filter:66-67)."""
+    if tag is not None:
+        m = PY_PODS.search(tag)
+        if m:
+            return (m["namespace"], m["pod_name"], m["container_name"],
+                    m["pod_uuid"], None, "pods")
+        m = PY_CONT.search(tag)
+        if m:
+            return (m["namespace"], m["pod_name"], m["container_name"],
+                    None, m["docker_id"], "containers")
+    return (None,) * 6
+
+
+def _adversarial_frame(spark):
     import pyspark.sql.types as T
 
-    e = spark.createDataFrame(
+    return spark.createDataFrame(
         [(t,) for t in ADVERSARIAL], T.StructType([T.StructField("tool", T.StringType())])
     )
+
+
+def _corpus_frame(spark):
+    from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table
+
+    return load_table(spark, "/root/testdata/sf0.001", "transcripts").limit(2000)
+
+
+@pytest.mark.parametrize(
+    "frame, n",
+    [(_adversarial_frame, len(ADVERSARIAL)), (_corpus_frame, 2000)],
+    ids=["adversarial", "corpus"],
+)
+def test_extraction_matches_python_re(spark, frame, n):
+    """The JVM extraction must agree with Python ``re`` on the reference
+    patterns, row for row, over malformed / pathological tags and the
+    sf0.001 corpus (2000 generated rows)."""
     cols = ["tool", "x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch"]
-    a = sorted(tuple(r) for r in extract_source_fields(e, method="native").select(*cols).collect())
-    b = sorted(tuple(r) for r in extract_source_fields(e, method="fast").select(*cols).collect())
-    assert a == b
+    rows = extract_source_fields(frame(spark)).select(*cols).collect()
+    assert len(rows) == n
+    for r in rows:
+        assert tuple(r)[1:] == _python_re_fields(r.tool), r.tool
 
 
 def test_record_override_wins(spark):

@@ -84,16 +84,3 @@ def test_fanout_write_roundtrip(spark):
     assert joined.where(F.col("routed_text") != F.col("text")).count() == 0
     sinks = [d for d in os.listdir(out) if d.startswith("namespace_name=")]
     assert any(".orphaned" in d for d in sinks)
-
-
-def test_observe_metrics(spark):
-    from fluent_plugin_kubernetes_metadata_filter_spark.route import observed
-
-    df = pipeline.enrich_transcripts(spark, SF)
-    df, obs = observed(df)
-    n = df.count()
-    m = obs.get
-    assert m["events_total"] == n
-    assert m["passthrough"] > 0
-    assert m["pod_enriched"] > 0
-    assert m["events_total"] >= m["pod_enriched"] + m["passthrough"]
