@@ -12,9 +12,8 @@ Design (SURVEY.md section 7):
 - the per-record cache probe / API fetch (kubernetes_metadata_cache_strategy.rb:24-102)
   becomes two broadcast-left hash joins plus expression when-chains for the
   as-of / orphan / skip branches;
-- the tag regexes (filter_kubernetes_metadata.rb:57-58) run either as
-  JVM-side regexp_extract (whole-stage codegen) or as one vectorized
-  pandas UDF (Arrow batches);
+- the tag regexes (filter_kubernetes_metadata.rb:57-58) run as JVM-side
+  regexp_extract (whole-stage codegen, no per-row Python);
 - routing is a salted repartition + partitionBy fan-out write with
   per-sink count aggregates and observe() metrics.
 

@@ -95,9 +95,6 @@ class PipelineConfig:
     #           trade up to O(100) sinks. Content is identical either way.
     route_exchange: bool = True
 
-    # Parallelism hint for the salted repartition; None = leave to AQE.
-    shuffle_partitions: int | None = None
-
     def with_(self, **kw) -> "PipelineConfig":
         """Return a copy with the given fields replaced."""
         from dataclasses import replace

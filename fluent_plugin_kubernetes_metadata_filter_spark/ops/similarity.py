@@ -213,16 +213,13 @@ def kmeans_centroids(df: DataFrame, dim: int, k: int = 16, n_iter: int = 2,
     shuffle keyed by centroid id (k keys, salted by AQE if skewed) —
     the sums arrive at the driver already reduced, never raw vectors.
 
-    Growth doctrine, explicitly: the k x dim driver materialization is
-    ~100 MB at the SemDeDup paper's scale (k ~ 11k, dim ~ 1k) and is
-    the binding bound near k ~ 10^5-10^6 (gigabytes). At that scale
-    (a) TRAIN the quantizer on a fixed-size deterministic sample (the
-    k-smallest-md5 seed rule already is one; Lloyd refinement on a
-    hash-sampled slice keeps every stage bounded), and (b) ASSIGN with
-    ``_assign_gemm_sharded``, which never holds more than one
-    shard_size x dim block per broadcast — the full matrix exists only
-    as S independent shards. Nothing requires all k centroids in one
-    buffer anywhere in the pipeline.
+    Growth bound, explicitly: every assignment path holds all k
+    centroids in one place — a literal k x dim matrix below
+    ``_GEMM_AUTO_K``, one broadcast numpy matrix from there up. That
+    is ~100 MB at the SemDeDup paper's scale (k ~ 11k, dim ~ 1k) and
+    becomes the binding bound near k ~ 10^5-10^6 (gigabytes), where
+    assignment would need blocking over centroid shards; no workload
+    here reaches it.
     """
     v = df.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("v"))
     # deterministic seeds: the k smallest md5(id) values
@@ -248,31 +245,42 @@ def kmeans_centroids(df: DataFrame, dim: int, k: int = 16, n_iter: int = 2,
     return cents
 
 
-def _nearest_centroid(v, cents: list[list[float]], grid: int | None = None):
-    """argmin_i ||v - c_i||^2 at O(1) expression DEPTH: the centroid
-    matrix is one literal array-of-arrays, ``transform`` yields all k
-    distances as a single array, argmin = position of the min (first
-    occurrence, i.e. lowest index on exact ties — identical to a strict
-    ``<`` when-chain). A when-chain grows codegen linearly in k and
-    falls out of JIT compilation around k ~ 256; this stays flat.
+def _centroid_dists(v, cents: list[list[float]], grid: int | None = None) -> F.Column:
+    """All k squared distances ||v - c_i||^2 as ONE array column at O(1)
+    expression depth: the centroid matrix is one literal array-of-arrays
+    and a single ``transform`` maps it to distances. A when-chain over
+    centroids grows codegen linearly in k and falls out of JIT
+    compilation around k ~ 256; this stays flat.
 
-    ``grid`` floors each distance to 10^-grid before the argmin so an
-    independent engine computing the same distances with a different
-    floating-point summation order (e.g. the DuckDB oracle's expanded
-    v.v - 2v.c + c.c form) assigns identically — same fixed-point
-    contract as the ANN sims. None (the IVF default) keeps raw doubles."""
+    ``grid`` floors each distance to 10^-grid inside the same
+    ``transform`` so an independent engine computing the same distances
+    with a different floating-point summation order (e.g. the DuckDB
+    oracle's expanded v.v - 2v.c + c.c form, or ``_assign_gemm``)
+    assigns identically — same fixed-point contract as the ANN sims.
+    The contract's limit: a distance within an ulp of a 10^-grid
+    boundary can floor to different grid points on the expression
+    path, the GEMM path and DuckDB. None (the IVF default) keeps raw
+    doubles."""
     cm = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-    ds = F.transform(
-        cm,
-        lambda c: F.aggregate(
+
+    def dist(c):
+        return F.aggregate(
             F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
             lambda acc, x: acc + x,
-        ),
-    )
-    if grid is not None:
-        m = float(10**grid)
-        ds = F.transform(ds, lambda d: F.floor(d * m) / m)
+        )
+
+    if grid is None:
+        return F.transform(cm, dist)
+    m = float(10**grid)
+    return F.transform(cm, lambda c: F.floor(dist(c) * m) / m)
+
+
+def _nearest_centroid(v, cents: list[list[float]], grid: int | None = None):
+    """argmin over `_centroid_dists`: position of the min (first
+    occurrence, i.e. lowest index on exact ties — identical to a strict
+    ``<`` when-chain)."""
+    ds = _centroid_dists(v, cents, grid)
     return (F.array_position(ds, F.array_min(ds)) - 1).cast("int")
 
 
@@ -297,19 +305,9 @@ def ivf_topk(queries: DataFrame, candidates: DataFrame, dim: int, k: int = 10,
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
-    # same flat-depth pattern as _nearest_centroid: one literal centroid
-    # matrix, all k distances as a single array, nprobe smallest by sort
-    cm = F.array(*[F.array(*[F.lit(float(x)) for x in cent]) for cent in cents])
-    ds = F.transform(
-        cm,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("qv"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
+    # all k distances as a single array, nprobe smallest by sort
     dists = F.zip_with(
-        ds,
+        _centroid_dists(F.col("qv"), cents),
         F.sequence(F.lit(0), F.lit(len(cents) - 1)),
         lambda d, i: F.struct(d.alias("d"), i.alias("c")),
     )
@@ -341,7 +339,9 @@ def _assign_gemm(df: DataFrame, cents: list[list[float]],
     speed — the expanded form the DuckDB oracle itself uses, floored
     to the same 10^-grid before the first-occurrence argmin, so the
     fixed-point assignment contract is unchanged (parity with the
-    expression path is pinned by tests).
+    expression path is pinned by tests) — up to its stated limit: a
+    distance within an ulp of a 10^-grid boundary can floor
+    differently here, on the expression path and in DuckDB.
 
     ``normalize=True`` additionally emits the L2-normalized vector
     (``vn``) from the same numpy pass — callers that need it (the
@@ -404,59 +404,10 @@ def _assign_gemm(df: DataFrame, cents: list[list[float]],
     return df.select(id_col, vec_col).mapInPandas(block, schema)
 
 
-def _assign_gemm_sharded(df: DataFrame, cents: list[list[float]],
-                         id_col: str, vec_col: str, grid: int | None,
-                         shard_size: int = 4096,
-                         normalize: bool = False) -> DataFrame:
-    """Block-sharded GEMM assignment — the growth path past the point
-    where one k x dim centroid matrix can sit in a single broadcast /
-    distance buffer (k ~ 10^5-10^6 at dim ~ 10^3 is gigabytes). Each
-    shard of ``shard_size`` centroids runs the plain ``_assign_gemm``
-    map pass with its own small broadcast; the per-item global argmin
-    is one groupBy(id) of the S shard candidates, taking the
-    lexicographic min of (dist, cluster) — which on floored-grid ties
-    picks the lowest global index, the exact first-occurrence contract
-    of the single-GEMM path (parity-pinned by tests).
-
-    Cost relative to single-GEMM: S corpus map passes (each touching
-    only id+vector columns) and ONE id-grain exchange for the argmin
-    reduce — the price of never materializing all k centroids in one
-    place. Per-executor broadcast footprint at any moment is bounded
-    by the shards actually resident, not k."""
-    if shard_size <= 0:
-        raise ValueError("shard_size must be positive")
-    parts = []
-    for s0 in range(0, len(cents), shard_size):
-        a = _assign_gemm(
-            df, cents[s0:s0 + shard_size], id_col, vec_col, grid,
-            normalize=normalize,
-        )
-        parts.append(a.withColumn("cluster", (F.col("cluster") + F.lit(s0)).cast("int")))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    key = F.struct(F.col("dist"), F.col("cluster"))
-    aggs = [F.min(key).alias("_m")]
-    if normalize:
-        # vn is a pure function of the input vector — identical in every
-        # shard — but min_by keeps the pick deterministic anyway
-        aggs.append(F.min_by(F.col("vn"), key).alias("vn"))
-    out = u.groupBy(id_col).agg(*aggs)
-    cols = [
-        F.col(id_col),
-        F.col("_m.cluster").alias("cluster"),
-        F.col("_m.dist").alias("dist"),
-    ]
-    if normalize:
-        cols.append(F.col("vn"))
-    return out.select(*cols)
-
-
-# Below this cluster count the literal-expression assignment stays the
-# default (zero Python, whole-plan JVM); above it the driver-side
-# literal tree and the interpreted O(k*dim)/row argmin dominate and
-# the GEMM path wins. Past broadcastable k, "gemm_sharded" blocks the
-# matrix (see _assign_gemm_sharded).
+# Centroid assignment picks its path from k alone: below this cluster
+# count the literal-expression assignment (zero Python, whole-plan JVM);
+# from it up the driver-side literal tree and the interpreted
+# O(k*dim)/row argmin dominate and the Arrow-batched GEMM wins.
 _GEMM_AUTO_K = 64
 
 
@@ -480,6 +431,9 @@ def _cluster_drops_gemm(nrm: DataFrame, threshold: float, grid: int,
     vector block, the same bound the grouped expansion's collect_list
     already implied. A degenerate hot cluster needs the capped
     expansion path instead (``bucket_cap`` — see ``semantic_dedup``).
+    The floored-grid cosine shares the assignment contract's limit: a
+    cosine within an ulp of a 10^-grid boundary can floor differently
+    here, on the expression pair path and in DuckDB.
     Returns one ``(id,)`` row per dropped item (already distinct)."""
     import pandas as pd
     import pyspark.sql.types as T
@@ -514,8 +468,7 @@ def semantic_dedup(df: DataFrame, dim: int, n_clusters: int = 16,
                    threshold: float = 0.95, n_iter: int = 2,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    seed: int = 42, grid: int = 4,
-                   bucket_cap: int | None = None,
-                   assign: str = "auto", gemm_shard_size: int = 4096):
+                   bucket_cap: int | None = None):
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means the
     embedding space, then inside each cluster drop every item that has
     a LOWER-id neighbor with cosine >= threshold — semantic dedup that
@@ -529,39 +482,32 @@ def semantic_dedup(df: DataFrame, dim: int, n_clusters: int = 16,
     floored distance (first-index tie-break), the drop rule on the
     floored cosine with the lower id always surviving.
 
-    Scale shape: assignment is a map-only pass (centroids are literal
-    expressions); the pairwise stage routes through the SAME capped
-    grouped expansion as the text-dedup stack, keyed by cluster id, the
-    vector riding as payload, so the whole op is ONE corpus shuffle plus
-    the id-keyed keep-mark join. Within-cluster work is O((n/k)^2) —
+    Scale shape: assignment is a map-only pass (literal centroid
+    expressions or the broadcast GEMM, by k — see below); the pairwise
+    stage routes through the SAME capped grouped expansion as the
+    text-dedup stack, keyed by cluster id, the vector riding as
+    payload, so the whole op is ONE corpus shuffle plus the id-keyed
+    keep-mark join. Within-cluster work is O((n/k)^2) —
     k must GROW with the corpus (the paper uses ~11k clusters for
     LAION-440M; target ~1-10k items/cluster) so each cluster-task stays
     bounded; ``bucket_cap`` turns a degenerate hot cluster into an
     observable drop instead of an OOM.
 
-    Because k grows with the corpus, ``assign`` picks the assignment
-    machinery: ``"expr"`` (literal centroid matrix, zero Python —
-    right at small k), ``"gemm"`` (broadcast numpy matrix +
-    Arrow-batched GEMM per batch — right at large k, where the
+    Because k grows with the corpus, k picks the assignment machinery:
+    below ``_GEMM_AUTO_K`` the literal centroid matrix (zero Python —
+    right at small k); from it up the broadcast numpy matrix with one
+    Arrow-batched GEMM per batch (``_assign_gemm``), because there the
     expression path's driver-built literal tree and interpreted
-    O(k*dim)/row argmin become a measured serial bottleneck: the
+    O(k*dim)/row argmin become a measured serial bottleneck (the
     pinned 4-vs-16 probe at k=512 scaled at 0.54 on the expression
-    path), or ``"auto"`` (gemm from k >= 64). ``"gemm_sharded"``
-    (blocks of ``gemm_shard_size`` centroids, global argmin via one
-    id-grain reduce) is the growth path past broadcastable k — see
-    ``_assign_gemm_sharded``. All paths share the floored-grid
-    first-min assignment contract and are parity-pinned by tests."""
+    path). Both share the floored-grid first-min assignment contract
+    and are parity-pinned by tests."""
     from fluent_plugin_kubernetes_metadata_filter_spark.ops.dedup import (
         grouped_pair_expansion,
     )
 
-    if assign not in ("auto", "expr", "gemm", "gemm_sharded"):
-        raise ValueError(f"unknown assign: {assign!r}")
-    use_gemm = assign in ("gemm", "gemm_sharded") or (
-        assign == "auto" and n_clusters >= _GEMM_AUTO_K
-    )
     cents = kmeans_centroids(df, dim, n_clusters, n_iter, id_col, vec_col, seed)
-    if use_gemm:
+    if n_clusters >= _GEMM_AUTO_K:
         # one Arrow pass yields assignment AND the normalized vector.
         # The result feeds TWO consumers (the pair expansion and the
         # final keep-mark join) whose plan prefixes are not identical
@@ -570,14 +516,9 @@ def semantic_dedup(df: DataFrame, dim: int, n_clusters: int = 16,
         # token_budget fix addressed. localCheckpoint pins one copy
         # (executor-local, lineage cut — the deliberate trade
         # documented at token_budget).
-        if assign == "gemm_sharded":
-            ag = _assign_gemm_sharded(
-                df, cents, id_col, vec_col, grid,
-                shard_size=gemm_shard_size, normalize=True,
-            )
-        else:
-            ag = _assign_gemm(df, cents, id_col, vec_col, grid, normalize=True)
-        ag = ag.localCheckpoint(eager=False)
+        ag = _assign_gemm(
+            df, cents, id_col, vec_col, grid, normalize=True
+        ).localCheckpoint(eager=False)
         asg = ag.select(F.col(id_col).alias("_sid"), F.col("cluster").alias("c"))
         nrm = ag.select(F.col(id_col).alias("_sid"), F.col("cluster").alias("c"), "vn")
     else:
@@ -630,9 +571,7 @@ def cluster_sample(df: DataFrame, dim: int, n_clusters: int = 16,
                    per_cluster: int = 4, n_iter: int = 0,
                    mode: str = "prototype",
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   seed: int = 42, grid: int = 4,
-                   assign: str = "auto",
-                   gemm_shard_size: int = 4096) -> DataFrame:
+                   seed: int = 42, grid: int = 4) -> DataFrame:
     """Cluster-balanced coreset selection over the embedding space —
     the SSL-prototypes pruning rule (Sorscher et al. 2022, "Beyond
     neural scaling laws", arXiv:2206.14486): k-means the corpus, rank
@@ -651,45 +590,24 @@ def cluster_sample(df: DataFrame, dim: int, n_clusters: int = 16,
     quantizer), assignment and ranking both run on the 10^-grid
     floored squared distance with id ascending as the tiebreak.
 
-    Scale shape: assignment is a MAP-ONLY pass (centroids compile to
-    literal expressions, k x dim floats on the driver); ranking is one
-    exchange — a window partitioned by cluster id. A window partition
-    is a single task, so as with `semantic_dedup`, ``n_clusters`` must
-    GROW with the corpus (target ~1-10k items/cluster) to bound
-    per-task work; unlike the pair stage there, the work here is
-    O(n/k log(n/k)) per cluster, not quadratic.
-
-    ``assign`` follows `semantic_dedup`: ``"expr"`` literal-matrix at
-    small k, ``"gemm"`` broadcast-numpy at large k, ``"auto"`` switches
-    at k >= 64, ``"gemm_sharded"`` blocks past broadcastable k — same
-    floored-grid first-min contract every way."""
+    Scale shape: assignment is a MAP-ONLY pass (literal centroid
+    expressions below ``_GEMM_AUTO_K``, the broadcast GEMM from it up —
+    the `semantic_dedup` rule); ranking is one exchange — a window
+    partitioned by cluster id. A window partition is a single task, so
+    as with `semantic_dedup`, ``n_clusters`` must GROW with the corpus
+    (target ~1-10k items/cluster) to bound per-task work; unlike the
+    pair stage there, the work here is O(n/k log(n/k)) per cluster,
+    not quadratic."""
     if mode not in ("prototype", "outlier"):
         raise ValueError(f"unknown mode: {mode!r}")
-    if assign not in ("auto", "expr", "gemm", "gemm_sharded"):
-        raise ValueError(f"unknown assign: {assign!r}")
     cents = kmeans_centroids(df, dim, n_clusters, n_iter, id_col, vec_col, seed)
-    if assign == "gemm_sharded":
-        asg = _assign_gemm_sharded(
-            df, cents, id_col, vec_col, grid, shard_size=gemm_shard_size
-        ).select(id_col, "dist", "cluster")
-    elif assign == "gemm" or (assign == "auto" and n_clusters >= _GEMM_AUTO_K):
+    if n_clusters >= _GEMM_AUTO_K:
         asg = _assign_gemm(df, cents, id_col, vec_col, grid).select(
             id_col, "dist", "cluster"
         )
     else:
-        m = float(10**grid)
         v = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-        cm = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-        ds = F.transform(
-            cm,
-            lambda c: F.floor(
-                F.aggregate(
-                    F.zip_with(F.col("v"), c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ) * m
-            ) / m,
-        )
+        ds = _centroid_dists(F.col("v"), cents, grid)
         asg = v.select(
             id_col,
             F.array_min(ds).alias("dist"),

@@ -27,6 +27,9 @@ from fluent_plugin_kubernetes_metadata_filter_spark.route import (
 )
 
 INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+# the routed output contract: input cols + turn_seq + assembled structs,
+# plus the route column; no scratch columns
+EMIT_COLS = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
 
 
 def enrich_transcripts(spark: SparkSession, sf_dir: str,
@@ -63,8 +66,7 @@ def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
     df = assemble_structs(df)
     if stats is not None:
         df = stats.attach(df)
-    keep = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
-    df = df.select(*keep)
+    df = df.select(*EMIT_COLS)
     if not cfg.route_exchange:
         # single-exchange mode: the conv_id window exchange (narrow
         # columns) is the job's ONLY shuffle — enrichment is broadcast

@@ -30,10 +30,7 @@ PASSTHROUGH = "__passthrough__"
 def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Physical-only skew defuse: repartition on (conv_id, salt)."""
     salt = F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(cfg.salt_buckets))
-    df = df.withColumn("_salt", salt)
-    n = cfg.shuffle_partitions
-    df = df.repartition(n, "conv_id", "_salt") if n else df.repartition("conv_id", "_salt")
-    return df.drop("_salt")
+    return df.withColumn("_salt", salt).repartition("conv_id", "_salt").drop("_salt")
 
 
 def route_partition(df: DataFrame, cfg: PipelineConfig,
@@ -51,10 +48,8 @@ def route_partition(df: DataFrame, cfg: PipelineConfig,
       conversation runs in every output file.
     """
     salt = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.salt_buckets))
-    df = df.withColumn("_salt", salt)
-    n = cfg.shuffle_partitions
     key = F.coalesce(F.col(route_column), F.lit("__null__"))
-    df = df.repartition(n, key, F.col("_salt")) if n else df.repartition(key, F.col("_salt"))
+    df = df.withColumn("_salt", salt).repartition(key, F.col("_salt"))
     return df.sortWithinPartitions(route_column, "conv_id", "turn_idx").drop("_salt")
 
 

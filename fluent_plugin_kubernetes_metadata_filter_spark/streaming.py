@@ -28,7 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 import pyspark.sql.types as T
 
 from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
-from fluent_plugin_kubernetes_metadata_filter_spark.enrich import enrich
+from fluent_plugin_kubernetes_metadata_filter_spark.enrich import assemble_structs, enrich
 from fluent_plugin_kubernetes_metadata_filter_spark.route import PASSTHROUGH
 from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir
 
@@ -299,13 +299,14 @@ def dedup_stream(stream_df: DataFrame, text_col: str = "text",
 
 def routed_sink(out_dir: str,
                 route_column: str = "namespace_name") -> Callable[[DataFrame, int], None]:
-    """Micro-batch ROUTED fan-out writer: every batch appends into the
-    same one-directory-per-sink layout ``io.write_routed`` produces in
-    batch mode, so the streamed output directory is interchangeable
-    with the batch job's (same partition scheme, same null-route
-    default partition) and downstream per-sink consumers cannot tell
-    which path wrote it. Per-sink count parity of the WRITTEN output
-    against the batch pipeline is pinned by
+    """Micro-batch ROUTED fan-out writer over ENRICHED batches: every
+    batch appends into the same one-directory-per-sink layout
+    ``io.write_routed`` produces in batch mode, in the batch job's emit
+    shape (``pipeline.EMIT_COLS``: assembled structs, no scratch
+    columns) minus ``turn_seq``, which needs the whole conversation and
+    a micro-batch holds only part of one. Same partition scheme, same
+    null-route default partition. Per-sink count parity and the written
+    column set are pinned by
     ``tests/test_streaming.py::test_dedup_enrich_stream_routed_fanout``.
 
     Delivery contract: with ``availableNow`` + a checkpoint, batch ids
@@ -314,9 +315,13 @@ def routed_sink(out_dir: str,
     caveat; exactly-once needs a transactional table format (the O24
     Iceberg contract, runtime-blocked in this sandbox)."""
     from fluent_plugin_kubernetes_metadata_filter_spark.io import write_routed
+    from fluent_plugin_kubernetes_metadata_filter_spark.pipeline import EMIT_COLS
+
+    cols = [c for c in EMIT_COLS if c != "turn_seq"]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_routed(batch_df, out_dir, route_column, mode="append")
+        out = assemble_structs(batch_df).select(*cols)
+        write_routed(out, out_dir, route_column, mode="append")
 
     return sink
 

@@ -18,6 +18,7 @@ DEFAULT = [
     "enrich_flat", "parse_containers", "route_counts", "per_conv_stats",
     "dedup_pipeline", "dedup_keepers", "minhash_pairs", "simhash_pairs",
     "full_curation", "dsir_weights", "semantic_dedup", "enrich_route_write",
+    "cluster_sample", "ann_topk_ivf",
 ]
 
 

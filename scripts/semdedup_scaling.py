@@ -36,7 +36,7 @@ PROBE_DIR = os.environ.get("SEMDEDUP_PROBE_DIR", "/root/repo/data/semdedupprobe"
 # vectors, 512 clusters) the literal-expression assignment path
 # measured 0.54 — a T = C + W/p fit attributed ~78s to a SERIAL
 # constant (driver-built k x dim literal tree + interpreted
-# O(k*dim)/row argmin), which drove the assign="gemm" path; gemm cut
+# O(k*dim)/row argmin), which drove the GEMM path; GEMM cut
 # both walls ~4.8x, leaving a 23s 16-core wall where ~14s of fixed
 # cost (JVM/session/seed-collect/stage barriers) dominates the ratio.
 # 384x (768k vectors, 3072 clusters) restores a fixed-cost-small

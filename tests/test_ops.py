@@ -1520,11 +1520,13 @@ def test_cluster_sample_outlier_mode_inverts_rank(spark, emb):
         similarity.cluster_sample(emb, dim=64, mode="weird")
 
 
-def test_cluster_sample_assignment_is_map_only(spark, emb):
-    """Centroid assignment adds no exchange: the only exchange in the
-    plan is the cluster-keyed rank window's."""
+@pytest.mark.parametrize("k", [4, 64])
+def test_cluster_sample_assignment_is_map_only(spark, emb, k):
+    """Centroid assignment adds no exchange on either side of the
+    expression/GEMM switch: the only exchange in the plan is the
+    cluster-keyed rank window's."""
     plan = (
-        similarity.cluster_sample(emb, dim=64, n_clusters=4, n_iter=0)
+        similarity.cluster_sample(emb, dim=64, n_clusters=k, n_iter=0)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1
@@ -1571,18 +1573,17 @@ def test_ngram_stats_topk_is_heap_not_global_sort(spark, docs):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_assign_gemm_parity_with_expr(spark, emb):
+def test_assign_gemm_parity_with_expr(spark, emb, monkeypatch):
     """The GEMM assignment path must agree with the literal-expression
     path item-for-item (cluster AND floored dist) — both at the k=8
     oracle config and at a k above the auto switch."""
     for k in (8, 64):
-        e = similarity.cluster_sample(emb, dim=64, n_clusters=k, per_cluster=2,
-                                      n_iter=0, assign="expr")
-        g = similarity.cluster_sample(emb, dim=64, n_clusters=k, per_cluster=2,
-                                      n_iter=0, assign="gemm")
-        er = {r.vec_id: (r.cluster, r.dist, r.rank, r.keep) for r in e.collect()}
-        gr = {r.vec_id: (r.cluster, r.dist, r.rank, r.keep) for r in g.collect()}
-        assert er == gr
+        got = []
+        for switch in (1 << 30, 1):  # force the expression path, then GEMM
+            monkeypatch.setattr(similarity, "_GEMM_AUTO_K", switch)
+            r = similarity.cluster_sample(emb, dim=64, n_clusters=k, per_cluster=2, n_iter=0)
+            got.append({x.vec_id: (x.cluster, x.dist, x.rank, x.keep) for x in r.collect()})
+        assert got[0] == got[1]
 
 
 def test_assign_gemm_carries_string_id_type(spark):
@@ -1599,38 +1600,13 @@ def test_assign_gemm_carries_string_id_type(spark):
     assert got["doc-0"] == 0 and got["doc-11"] == 1
 
 
-def test_assign_gemm_sharded_parity(spark, emb):
-    """The block-sharded assignment (shard_size forcing multiple
-    shards, including a ragged last shard) must agree item-for-item
-    with the single-broadcast GEMM — cluster, dist, rank, keep — in
-    both consumers."""
-    g = similarity.cluster_sample(emb, dim=64, n_clusters=8, per_cluster=2,
-                                  n_iter=0, assign="gemm")
-    s = similarity.cluster_sample(emb, dim=64, n_clusters=8, per_cluster=2,
-                                  n_iter=0, assign="gemm_sharded",
-                                  gemm_shard_size=3)
-    gr = {r.vec_id: (r.cluster, r.dist, r.rank, r.keep) for r in g.collect()}
-    sr = {r.vec_id: (r.cluster, r.dist, r.rank, r.keep) for r in s.collect()}
-    assert gr == sr
-    mg, _ = similarity.semantic_dedup(emb, dim=64, n_clusters=8, threshold=0.2,
-                                      n_iter=0, assign="gemm")
-    ms, _ = similarity.semantic_dedup(emb, dim=64, n_clusters=8, threshold=0.2,
-                                      n_iter=0, assign="gemm_sharded",
-                                      gemm_shard_size=3)
-    assert ({r.vec_id: (r.cluster, r.keep) for r in mg.collect()}
-            == {r.vec_id: (r.cluster, r.keep) for r in ms.collect()})
-
-
-def test_semantic_dedup_gemm_parity(spark, emb):
-    me, _ = similarity.semantic_dedup(emb, dim=64, n_clusters=8, threshold=0.2,
-                                      n_iter=0, assign="expr")
-    mg, _ = similarity.semantic_dedup(emb, dim=64, n_clusters=8, threshold=0.2,
-                                      n_iter=0, assign="gemm")
-    er = {r.vec_id: (r.cluster, r.keep) for r in me.collect()}
-    gr = {r.vec_id: (r.cluster, r.keep) for r in mg.collect()}
-    assert er == gr
-    with pytest.raises(ValueError):
-        similarity.semantic_dedup(emb, dim=64, assign="blas")
+def test_semantic_dedup_gemm_parity(spark, emb, monkeypatch):
+    got = []
+    for switch in (1 << 30, 1):  # force the expression path, then GEMM
+        monkeypatch.setattr(similarity, "_GEMM_AUTO_K", switch)
+        m, _ = similarity.semantic_dedup(emb, dim=64, n_clusters=8, threshold=0.2, n_iter=0)
+        got.append({r.vec_id: (r.cluster, r.keep) for r in m.collect()})
+    assert got[0] == got[1]
 
 
 def test_dsir_weights_prefer_target_like_docs(spark):

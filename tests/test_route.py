@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_salting_preserves_content(spark):
     df = load_table(spark, SF, "transcripts")
-    salted = salted_repartition(df, PipelineConfig(salt_buckets=16, shuffle_partitions=8))
+    salted = salted_repartition(df, PipelineConfig(salt_buckets=16))
     assert salted.exceptAll(df).count() == 0
     assert df.exceptAll(salted).count() == 0
     assert sorted(salted.columns) == sorted(df.columns)  # no _salt leak

@@ -337,7 +337,7 @@ def test_dedup_enrich_stream_routed_fanout(spark, tmp_path):
     dedup + enrich) over the same rows. The earlier parity test stops
     at in-memory counts; this one reads the fan-out directory back, so
     partition layout (incl. the null-route default partition) is under
-    test too."""
+    test too, and so is the written column set."""
     from fluent_plugin_kubernetes_metadata_filter_spark.enrich import enrich
     from fluent_plugin_kubernetes_metadata_filter_spark.ops.dedup import (
         _content_fingerprint,
@@ -394,3 +394,9 @@ def test_dedup_enrich_stream_routed_fanout(spark, tmp_path):
     }
     assert written == batch_counts
     assert sum(written.values()) == 120
+    # the batch job's emit shape (no x_*/i_* scratch, no flat metadata)
+    # minus turn_seq, which needs the whole conversation
+    batch_cols = pipeline.routed_frames(batch_in, pods, ns).columns
+    assert sorted(spark.read.parquet(out).columns) == sorted(
+        c for c in batch_cols if c != "turn_seq"
+    )
