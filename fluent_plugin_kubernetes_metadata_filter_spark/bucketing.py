@@ -15,7 +15,8 @@ co-located buckets:
     # .explain(): SortMergeJoin with NO Exchange on either side
 
 This module wraps saveAsTable bucketing (the only Spark API that
-persists bucket metadata) and asserts the exchange-free plan.
+persists bucket metadata); tests/test_bucketing.py asserts the
+exchange-free plan.
 """
 
 from __future__ import annotations
@@ -42,9 +43,3 @@ def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
     r = spark.table(right_table)
     return l.join(r, on=keys, how=how)
 
-
-def join_is_exchange_free(df: DataFrame) -> bool:
-    """True when the physical plan contains no shuffle Exchange —
-    the property bucketing buys (plan-level check used in tests)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" not in plan

@@ -28,9 +28,10 @@ import os
 import time
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
+
+from fluent_plugin_kubernetes_metadata_filter_spark.route import PASSTHROUGH
 
 
 @dataclass
@@ -96,9 +97,6 @@ def resumable_fanout_write(df: DataFrame, out_dir: str, manifest: LineageManifes
     group. Null routes are labeled with the shared ``PASSTHROUGH``
     constant, matching ``pipeline.run``'s count keys.
     """
-    from fluent_plugin_kubernetes_metadata_filter_spark.route import PASSTHROUGH
-    from pyspark.sql import Observation
-
     done = manifest.completed_sinks(input_snapshot)
     # manifests written before the passthrough-label unification record
     # the null-route sink under parquet's partition placeholder; treat

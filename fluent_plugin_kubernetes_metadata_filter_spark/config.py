@@ -17,6 +17,11 @@ class PipelineConfig:
 
     Defaults match the reference defaults exactly
     (filter_kubernetes_metadata.rb:44-99).
+
+    A config is also the key of the expression cache (exprcache.JvmMemo):
+    the enrichment's Column expressions are built once per config and
+    JVM. So every field must stay hashable — tuples, not lists;
+    ``annotation_match`` given as a list is stored as a tuple.
     """
 
     # filter:44 — when None the dim lookups are skipped (get_pod_metadata
@@ -95,11 +100,12 @@ class PipelineConfig:
     #           trade up to O(100) sinks. Content is identical either way.
     route_exchange: bool = True
 
+    def __post_init__(self) -> None:
+        object.__setattr__(self, "annotation_match", tuple(self.annotation_match))
+
     def with_(self, **kw) -> "PipelineConfig":
         """Return a copy with the given fields replaced."""
         from dataclasses import replace
 
         return replace(self, **kw)
 
-
-DEFAULT_CONFIG = PipelineConfig()

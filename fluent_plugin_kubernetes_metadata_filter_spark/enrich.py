@@ -27,6 +27,15 @@ Empty-value omission (common.rb:49-50,105-107; filter:358-360;
 cache_strategy.rb:101): absent keys are represented as NULLs in a fixed
 StructType; empty maps / '' ids become NULL.
 
+Composition: tag extraction and identity (parse.py), the pod and
+namespace broadcast joins, then all 21 branch columns (ENRICHED_COLS
+plus the i_pod_dim_hit/i_full flags) in ONE ``withColumns`` — they read
+only join outputs — and one drop of the dim columns. Each stage's Column
+expressions (dim select lists, join conditions, branch columns, the
+emit structs) are built once per ``PipelineConfig`` and JVM
+(exprcache.JvmMemo), so a warm build is a few hundred Py4J round trips
+instead of thousands; streaming pays this per micro-batch.
+
 Scale notes: both dims are broadcast (the reference caps its caches at
 1000 entries — real clusters have O(10^4) pods/namespaces, well under
 broadcast thresholds); the enrichment therefore adds ZERO shuffles — it
@@ -35,10 +44,13 @@ pipelines into the scan and stays in whole-stage codegen end-to-end.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
+from fluent_plugin_kubernetes_metadata_filter_spark.exprcache import JvmMemo
 from fluent_plugin_kubernetes_metadata_filter_spark.parse import (
     extract_source_fields,
     resolve_identity,
@@ -114,6 +126,11 @@ def prepare_pods_dim(pods_dim: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per-pod projection of parse_pod_metadata (common.rb:54-110):
     labels/annotations policy, containerID prefix strip, and the
     container-name -> status map used by the correlation (O19)."""
+    return pods_dim.select(*_pods_dim_exprs(cfg))
+
+
+@JvmMemo
+def _pods_dim_exprs(cfg: PipelineConfig) -> list[Column]:
     containers = F.transform(
         F.col("containers"),
         lambda c: F.struct(
@@ -136,7 +153,7 @@ def prepare_pods_dim(pods_dim: DataFrame, cfg: PipelineConfig) -> DataFrame:
         if cfg.include_ownerrefs_metadata
         else F.lit(None).cast("array<struct<kind:string,name:string>>")
     )
-    return pods_dim.select(
+    return [
         F.col("namespace_name").alias("p_namespace_name"),
         F.col("pod_name").alias("p_pod_name"),
         F.col("pod_id").alias("p_pod_id"),
@@ -148,19 +165,24 @@ def prepare_pods_dim(pods_dim: DataFrame, cfg: PipelineConfig) -> DataFrame:
         ).alias("p_annotations"),
         owner.alias("p_ownerrefs"),
         cmap.alias("p_containers"),
-    )
+    ]
 
 
 def prepare_namespaces_dim(ns_dim: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """parse_namespace_metadata (common.rb:40-52); creation_timestamp is
     kept for the as-of comparison and never emitted
     (cache_strategy.rb:100)."""
+    return ns_dim.select(*_namespaces_dim_exprs(cfg))
+
+
+@JvmMemo
+def _namespaces_dim_exprs(cfg: PipelineConfig) -> list[Column]:
     labels = (
         F.lit(None).cast("map<string,string>")
         if (cfg.skip_labels or cfg.skip_namespace_labels)
         else _nonempty_map(_de_dot(F.col("labels"), cfg))
     )
-    return ns_dim.select(
+    return [
         F.col("namespace_name").alias("n_namespace_name"),
         F.col("namespace_id").alias("n_namespace_id"),
         labels.alias("n_labels"),
@@ -168,7 +190,7 @@ def prepare_namespaces_dim(ns_dim: DataFrame, cfg: PipelineConfig) -> DataFrame:
             _annotation_filter(F.col("annotations"), cfg.annotation_match), cfg
         ).alias("n_annotations"),
         F.col("creation_timestamp").alias("n_creation_timestamp"),
-    )
+    ]
 
 
 def enrich(df: DataFrame, pods_dim: DataFrame, ns_dim: DataFrame,
@@ -181,7 +203,25 @@ def enrich(df: DataFrame, pods_dim: DataFrame, ns_dim: DataFrame,
                                pods_pattern=cfg.regex_var_log_pods,
                                containers_pattern=cfg.regex_var_log_containers)
     df = resolve_identity(df, cfg)
+    x = _enrich_exprs(cfg, ts_col)
+    j = df.join(F.broadcast(prepare_pods_dim(pods_dim, cfg)), on=x.pod_on, how="left")
+    if x.ns_on is None:
+        j = j.withColumns(x.ns_absent)
+    else:
+        j = j.join(F.broadcast(prepare_namespaces_dim(ns_dim, cfg)), on=x.ns_on, how="left")
+    # every branch column reads only join outputs, so they are one projection
+    return j.withColumns(x.branches).drop(*POD_DIM_COLS, *NS_DIM_COLS)
 
+
+class _EnrichExprs(NamedTuple):
+    pod_on: Column
+    ns_on: Column | None  # None under skip_namespace_metadata: no ns join
+    ns_absent: dict[str, Column]  # the n_* columns the branches read, all null
+    branches: dict[str, Column]  # ENRICHED_COLS + the i_pod_dim_hit/i_full flags
+
+
+@JvmMemo
+def _enrich_exprs(cfg: PipelineConfig, ts_col: str) -> _EnrichExprs:
     # Base identity fields are NOT url-gated: get_metadata_for_record
     # (filter:326-336) always emits container_name/namespace_name/pod_name
     # and docker.container_id on a tag match; only the get_pod_metadata
@@ -190,23 +230,19 @@ def enrich(df: DataFrame, pods_dim: DataFrame, ns_dim: DataFrame,
     matched = F.col("i_matched")
     lookup = matched & F.lit(enabled)
 
-    p = F.broadcast(prepare_pods_dim(pods_dim, cfg))
-    j = df.join(
-        p,
-        on=(F.col("i_namespace") == F.col("p_namespace_name"))
-        & (F.col("i_pod_name") == F.col("p_pod_name")),
-        how="left",
+    pod_on = (F.col("i_namespace") == F.col("p_namespace_name")) & (
+        F.col("i_pod_name") == F.col("p_pod_name")
     )
-    if not cfg.skip_namespace_metadata:
-        n = F.broadcast(prepare_namespaces_dim(ns_dim, cfg))
-        j = j.join(n, on=F.col("i_namespace") == F.col("n_namespace_name"), how="left")
-    else:
-        j = (
-            j.withColumn("n_namespace_id", F.lit(None).cast("string"))
-            .withColumn("n_labels", F.lit(None).cast("map<string,string>"))
-            .withColumn("n_annotations", F.lit(None).cast("map<string,string>"))
-            .withColumn("n_creation_timestamp", F.lit(None).cast("timestamp"))
-        )
+    ns_on = (
+        None if cfg.skip_namespace_metadata
+        else F.col("i_namespace") == F.col("n_namespace_name")
+    )
+    ns_absent = {
+        "n_namespace_id": F.lit(None).cast("string"),
+        "n_labels": F.lit(None).cast("map<string,string>"),
+        "n_annotations": F.lit(None).cast("map<string,string>"),
+        "n_creation_timestamp": F.lit(None).cast("timestamp"),
+    }
 
     pod_found = lookup & F.col("p_pod_id").isNotNull()
     ns_found = lookup & F.col("n_namespace_id").isNotNull()
@@ -227,82 +263,61 @@ def enrich(df: DataFrame, pods_dim: DataFrame, ns_dim: DataFrame,
     allow = cfg.allow_orphans
     orphaned = orphan & F.lit(allow)
 
-    null_s = F.lit(None).cast("string")
     null_m = F.lit(None).cast("map<string,string>")
-
-    out = (
-        j.withColumn(
-            "namespace_name",
-            F.when(orphaned, F.lit(cfg.orphaned_namespace_name)).otherwise(
-                F.when(matched, F.col("i_namespace"))
-            ),
-        )
-        .withColumn("pod_name", F.when(matched, F.col("i_pod_name")))
-        .withColumn("container_name", F.when(matched, F.col("i_container_name")))
-        .withColumn("orphaned_namespace", F.when(orphaned, F.col("i_namespace")))
-        .withColumn(
-            "namespace_id",
-            F.when(orphaned, F.lit(cfg.orphaned_namespace_id)).otherwise(
-                F.when(full | ns_meta, F.col("n_namespace_id"))
-            ),
-        )
-        .withColumn(
-            "pod_id",
-            F.when(full, F.col("p_pod_id")).when(asof_acc, F.col("i_cache_key")),
-        )
-        .withColumn("pod_ip", F.when(full, F.col("p_pod_ip")))
-        .withColumn("host", F.when(full, F.col("p_host")))
-        .withColumn(
-            "master_url",
-            F.when(full, F.lit(None if cfg.skip_master_url else cfg.kubernetes_url).cast("string")),
-        )
-        .withColumn("labels", F.when(full, F.col("p_labels")).otherwise(null_m))
-        .withColumn("annotations", F.when(full, F.col("p_annotations")).otherwise(null_m))
-        .withColumn(
-            "ownerrefs",
-            F.when(full, F.col("p_ownerrefs")).otherwise(
-                F.lit(None).cast("array<struct<kind:string,name:string>>")
-            ),
-        )
-        .withColumn("namespace_labels", F.when(full | ns_meta, F.col("n_labels")).otherwise(null_m))
-        .withColumn(
-            "namespace_annotations",
-            F.when(full | ns_meta, F.col("n_annotations")).otherwise(null_m),
-        )
-    )
 
     # O19 container-status correlation (filter:336-349; common.rb:60-79)
     centry = F.element_at(F.col("p_containers"), F.col("i_container_name"))
     corr = full & centry.isNotNull() & F.lit(not cfg.skip_container_metadata)
-    out = (
-        out.withColumn("container_image", F.when(corr, centry["image"]))
-        .withColumn(
-            "container_image_id",
-            F.when(corr & (centry["image_id"] != ""), centry["image_id"]),
-        )
-        .withColumn(
-            "docker_container_id",
-            # containerID (stripped) wins when correlated & non-empty
-            # (filter:345-348); else the tag/record docker id (filter:335);
-            # empty -> docker struct dropped (filter:358-360)
-            F.when(corr & (centry["container_id"] != ""), centry["container_id"]).otherwise(
-                F.when(matched & (F.col("i_docker_id") != ""), F.col("i_docker_id"))
-            ),
-        )
-    )
 
-    # Explicit branch flags (internal i_* columns, like i_matched): a dim
-    # row with a legitimately-null pod_ip must still read as a full hit,
-    # so downstream NEVER proxies the branch off pod_ip nullness.
-    out = out.withColumn("i_pod_dim_hit", pod_found).withColumn("i_full", full)
-
-    return out.drop(*POD_DIM_COLS, *NS_DIM_COLS)
+    branches = {
+        "namespace_name": F.when(orphaned, F.lit(cfg.orphaned_namespace_name)).otherwise(
+            F.when(matched, F.col("i_namespace"))
+        ),
+        "pod_name": F.when(matched, F.col("i_pod_name")),
+        "container_name": F.when(matched, F.col("i_container_name")),
+        "orphaned_namespace": F.when(orphaned, F.col("i_namespace")),
+        "namespace_id": F.when(orphaned, F.lit(cfg.orphaned_namespace_id)).otherwise(
+            F.when(full | ns_meta, F.col("n_namespace_id"))
+        ),
+        "pod_id": F.when(full, F.col("p_pod_id")).when(asof_acc, F.col("i_cache_key")),
+        "pod_ip": F.when(full, F.col("p_pod_ip")),
+        "host": F.when(full, F.col("p_host")),
+        "master_url": F.when(
+            full, F.lit(None if cfg.skip_master_url else cfg.kubernetes_url).cast("string")
+        ),
+        "labels": F.when(full, F.col("p_labels")).otherwise(null_m),
+        "annotations": F.when(full, F.col("p_annotations")).otherwise(null_m),
+        "ownerrefs": F.when(full, F.col("p_ownerrefs")).otherwise(
+            F.lit(None).cast("array<struct<kind:string,name:string>>")
+        ),
+        "namespace_labels": F.when(full | ns_meta, F.col("n_labels")).otherwise(null_m),
+        "namespace_annotations": F.when(full | ns_meta, F.col("n_annotations")).otherwise(null_m),
+        "container_image": F.when(corr, centry["image"]),
+        "container_image_id": F.when(corr & (centry["image_id"] != ""), centry["image_id"]),
+        # containerID (stripped) wins when correlated & non-empty
+        # (filter:345-348); else the tag/record docker id (filter:335);
+        # empty -> docker struct dropped (filter:358-360)
+        "docker_container_id": F.when(
+            corr & (centry["container_id"] != ""), centry["container_id"]
+        ).otherwise(F.when(matched & (F.col("i_docker_id") != ""), F.col("i_docker_id"))),
+        # Explicit branch flags (internal i_* columns, like i_matched): a
+        # dim row with a legitimately-null pod_ip must still read as a full
+        # hit, so downstream NEVER proxies the branch off pod_ip nullness.
+        "i_pod_dim_hit": pod_found,
+        "i_full": full,
+    }
+    return _EnrichExprs(pod_on, ns_on, ns_absent, branches)
 
 
 def assemble_structs(df: DataFrame) -> DataFrame:
     """Build the emit contract: nested ``kubernetes`` / ``docker`` structs
     (section 1.2 of SURVEY.md), with struct-level NULL when the reference
     would omit the whole sub-record (passthrough rows; empty docker)."""
+    return df.withColumns(_struct_exprs())
+
+
+@JvmMemo
+def _struct_exprs() -> dict[str, Column]:
     kube_fields = [
         "container_name",
         "namespace_name",
@@ -329,4 +344,4 @@ def assemble_structs(df: DataFrame) -> DataFrame:
         F.col("docker_container_id").isNotNull(),
         F.struct(F.col("docker_container_id").alias("container_id")),
     )
-    return df.withColumn("kubernetes_meta", kube).withColumn("docker_meta", docker)
+    return {"kubernetes_meta": kube, "docker_meta": docker}

@@ -15,9 +15,12 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
+from fluent_plugin_kubernetes_metadata_filter_spark.exprcache import JvmMemo
+
 
 # counter name -> aggregate over the enriched frame; names mirror the
 # bump sites in the reference (cache_strategy.rb:28,48,63,66; filter:109)
+@JvmMemo
 def _counters() -> dict[str, F.Column]:
     matched = F.col("i_matched")
     full = F.col("i_full")  # explicit branch flag (null pod_ip is still full)

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, Observation, Window
 # threshold ~ (1/16)^(1/4) ~ 0.5
 N_PERM = 64
 N_BANDS = 16
-ROWS_PER_BAND = N_PERM // N_BANDS
 # 2^31-1 (Mersenne prime). Shingle hashes and permutation coefficients
 # stay below 2^31 so a*h+b fits in int64 under ANSI arithmetic.
 _MERSENNE = (1 << 31) - 1

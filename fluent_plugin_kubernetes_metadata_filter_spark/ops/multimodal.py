@@ -142,22 +142,6 @@ def extract_features(df: DataFrame,
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def resize_stub(df: DataFrame, width: int, height: int,
-                decoder: Callable[[pd.Series], pd.Series] = unavailable_decoder) -> DataFrame:
-    """Image resize plumbing: same binary-in/binary-out mapInPandas shape;
-    the transform itself is the injected decoder's concern."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            _ = decoder(pdf["payload"])  # decode hook (raises when stubbed)
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return df.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling *plan*: expands (media_id, duration_ms) into
     frame timestamps JVM-side; the decode of each frame is the stubbed

@@ -14,6 +14,9 @@ One execution strategy: ``F.regexp_extract`` per group over the JVM-side
 pattern, so the parse stays inside whole-stage codegen with no Python
 worker at all. Group indices are computed programmatically from the
 pattern via Python ``re`` so they can never drift from the pattern.
+The expressions are built once per (source column, patterns) and once
+per record-identity schema (exprcache.JvmMemo); each stage is applied
+with one ``withColumns``.
 
 At 100 TB the extraction is embarrassingly parallel and pipelined into
 the scan; it never shuffles.
@@ -25,6 +28,8 @@ import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from fluent_plugin_kubernetes_metadata_filter_spark.exprcache import JvmMemo
 
 # Verbatim semantics of filter_kubernetes_metadata.rb:57-58 (named-group
 # syntax (?<x>...) is shared by Ruby/Java; Python needs (?P<x>...)).
@@ -89,12 +94,22 @@ def extract_source_fields(df: DataFrame, source_col: str = "tool",
     per-column formulation ran the union regex up to 12x/row — measured
     2.8s -> 1.6s at sf0.1 on the isolated extraction; the non-cheap
     multi-referenced ``_xs`` alias blocks CollapseProject from
-    re-inlining it). Each branch RLIKE is additionally guarded by a
-    ``contains()`` on the branch's literal prefix — a NECESSARY
-    condition for a match when the pattern embeds that literal — so
-    passthrough rows (no k8s tag) skip the backtracking regexes
-    entirely. Custom patterns get no contains guard (their required
-    literals are unknown)."""
+    re-inlining it, which is why it is a projection of its own). Each
+    branch RLIKE is additionally guarded by a ``contains()`` on the
+    branch's literal prefix — a NECESSARY condition for a match when the
+    pattern embeds that literal — so passthrough rows (no k8s tag) skip
+    the backtracking regexes entirely. Custom patterns get no contains
+    guard (their required literals are unknown)."""
+    staged, fields = _extract_exprs(source_col, pods_pattern, containers_pattern)
+    return df.withColumns(staged).withColumns(fields).drop("_xs")
+
+
+@JvmMemo
+def _extract_exprs(source_col: str, pods_pattern: str | None,
+                   containers_pattern: str | None
+                   ) -> tuple[dict[str, Column], dict[str, Column]]:
+    """(the ``_xs`` struct + ``x_branch``, the ``x_*`` fields read out of
+    ``_xs``) for extract_source_fields."""
     pp = pods_pattern or REGEX_VAR_LOG_PODS
     cp = containers_pattern or REGEX_VAR_LOG_CONTAINERS
     src = F.col(source_col)
@@ -129,11 +144,30 @@ def extract_source_fields(df: DataFrame, source_col: str = "tool",
     # within one Project codegen subexpression elimination already
     # shares the match conditions between x_branch and _xs).
     branch = F.when(pods_m, F.lit("pods")).when(cont_m, F.lit("containers"))
-    df = df.withColumn("_xs", xs).withColumn("x_branch", branch)
-    for name in EXTRACTED_COLS:
-        if name != "x_branch":
-            df = df.withColumn(name, F.col(f"_xs.{name}"))
-    return df.drop("_xs")
+    return (
+        {"_xs": xs, "x_branch": branch},
+        {name: F.col(f"_xs.{name}") for name in EXTRACTED_COLS if name != "x_branch"},
+    )
+
+
+# Record-carried identity (namespace, pod, container, docker id), either
+# as nested structs (kubernetes.docker input schema) or as flat k8s_*
+# columns (transcripts_carried fixture).
+_RECORD_IDENTITY = {
+    "nested": ("kubernetes.namespace_name", "kubernetes.pod_name",
+               "kubernetes.container_name", "docker.container_id"),
+    "flat": ("k8s_namespace_name", "k8s_pod_name", "k8s_container_name",
+             "docker_container_id"),
+}
+
+
+def _record_kind(cols: set[str]) -> str | None:
+    """Which record-identity schema ``cols`` carries, if any."""
+    if {"kubernetes", "docker"} <= cols:
+        return "nested"
+    if set(_RECORD_IDENTITY["flat"]) <= cols:
+        return "flat"
+    return None
 
 
 def resolve_identity(df: DataFrame, cfg) -> DataFrame:
@@ -148,24 +182,13 @@ def resolve_identity(df: DataFrame, cfg) -> DataFrame:
     key?-chain at filter:385-391); when taken, the record's container_id
     serves as both cache key and docker id (filter:392-399).
     """
-    cols = set(df.columns)
-    # record-carried identity either as nested structs (kubernetes.docker
-    # input schema) or as flat k8s_* columns (transcripts_carried fixture)
-    if {"kubernetes", "docker"} <= cols:
-        r_ns = F.col("kubernetes.namespace_name")
-        r_pod = F.col("kubernetes.pod_name")
-        r_cn = F.col("kubernetes.container_name")
-        r_did = F.col("docker.container_id")
-        has_record = True
-    elif {"k8s_namespace_name", "k8s_pod_name", "k8s_container_name", "docker_container_id"} <= cols:
-        r_ns = F.col("k8s_namespace_name")
-        r_pod = F.col("k8s_pod_name")
-        r_cn = F.col("k8s_container_name")
-        r_did = F.col("docker_container_id")
-        has_record = True
-    else:
-        has_record = False
+    kind = _record_kind(set(df.columns)) if cfg.lookup_from_k8s_field else None
+    return df.withColumns(_identity_exprs(kind))
 
+
+@JvmMemo
+def _identity_exprs(record_kind: str | None) -> dict[str, Column]:
+    """The i_* columns; ``record_kind`` None = tag parse only."""
     tag_matched = F.col("x_branch").isNotNull()
     # filter:368-372 — pod_uuid is the key iff the PODS branch matched
     # (it may legally be the empty string); otherwise docker_id.
@@ -173,7 +196,8 @@ def resolve_identity(df: DataFrame, cfg) -> DataFrame:
         F.col("x_docker_id")
     )
 
-    if cfg.lookup_from_k8s_field and has_record:
+    if record_kind is not None:
+        r_ns, r_pod, r_cn, r_did = (F.col(c) for c in _RECORD_IDENTITY[record_kind])
         rec_ok = r_ns.isNotNull() & r_pod.isNotNull() & r_cn.isNotNull() & r_did.isNotNull()
         ns = F.when(rec_ok, r_ns).otherwise(F.col("x_namespace"))
         pod = F.when(rec_ok, r_pod).otherwise(F.col("x_pod_name"))
@@ -191,11 +215,11 @@ def resolve_identity(df: DataFrame, cfg) -> DataFrame:
             tag_matched,
         )
 
-    return (
-        df.withColumn("i_namespace", ns)
-        .withColumn("i_pod_name", pod)
-        .withColumn("i_container_name", cn)
-        .withColumn("i_cache_key", key)
-        .withColumn("i_docker_id", did)
-        .withColumn("i_matched", matched)
-    )
+    return {
+        "i_namespace": ns,
+        "i_pod_name": pod,
+        "i_container_name": cn,
+        "i_cache_key": key,
+        "i_docker_id": did,
+        "i_matched": matched,
+    }

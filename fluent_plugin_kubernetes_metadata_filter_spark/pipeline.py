@@ -9,15 +9,22 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import Counter
+from urllib.parse import unquote
 
-from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
-from fluent_plugin_kubernetes_metadata_filter_spark.enrich import (
-    ENRICHED_COLS,
-    assemble_structs,
-    enrich,
+import pyarrow.dataset as ds
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from fluent_plugin_kubernetes_metadata_filter_spark.checkpoint import (
+    LineageManifest,
+    input_snapshot_id,
+    resumable_fanout_write,
 )
-from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table, write_routed
+from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
+from fluent_plugin_kubernetes_metadata_filter_spark.enrich import assemble_structs, enrich
+from fluent_plugin_kubernetes_metadata_filter_spark.exprcache import JvmMemo
+from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir, load_table, write_routed
 from fluent_plugin_kubernetes_metadata_filter_spark.metrics import PipelineStats
 from fluent_plugin_kubernetes_metadata_filter_spark.route import (
     PASSTHROUGH,
@@ -66,7 +73,7 @@ def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
     df = assemble_structs(df)
     if stats is not None:
         df = stats.attach(df)
-    df = df.select(*EMIT_COLS)
+    df = df.select(*_emit_exprs())
     if not cfg.route_exchange:
         # single-exchange mode: the conv_id window exchange (narrow
         # columns) is the job's ONLY shuffle — enrichment is broadcast
@@ -75,6 +82,11 @@ def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
         # See PipelineConfig.route_exchange for the file-count trade.
         return df
     return route_partition(df, cfg, cfg.route_column)
+
+
+@JvmMemo
+def _emit_exprs() -> list[Column]:
+    return [F.col(c) for c in EMIT_COLS]
 
 
 def routed_output(spark: SparkSession, sf_dir: str,
@@ -128,11 +140,6 @@ def written_sink_counts(out_dir: str, route_column: str) -> list[tuple[str, int]
     the caller run the distributed readback (at that scale a table
     format's snapshot statistics — Iceberg — is the real answer,
     SURVEY §3.3)."""
-    from collections import Counter
-    from urllib.parse import unquote
-
-    import pyarrow.dataset as ds
-
     d = ds.dataset(out_dir, format="parquet", partitioning="hive")
     frags = list(d.get_fragments())
     if len(frags) > _FOOTER_COUNT_MAX_FILES:
@@ -165,13 +172,6 @@ def run_resumable(spark: SparkSession, sf_dir: str, out_dir: str,
     "lineage": [records], "input_snapshot": id}. See checkpoint.py for
     the manifest contract and metrics.py for the counter vocabulary.
     """
-    from fluent_plugin_kubernetes_metadata_filter_spark.checkpoint import (
-        LineageManifest,
-        input_snapshot_id,
-        resumable_fanout_write,
-    )
-    from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir
-
     snapshot = input_snapshot_id(spark, aux_dir(sf_dir))
     stats = PipelineStats()
     df = routed_frames(

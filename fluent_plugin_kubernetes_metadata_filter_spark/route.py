@@ -18,9 +18,10 @@ fan-outs by tag (README.md:104-110) and counts per-path stats
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from fluent_plugin_kubernetes_metadata_filter_spark.config import PipelineConfig
+from fluent_plugin_kubernetes_metadata_filter_spark.exprcache import JvmMemo
 
 # canonical label for the null-route sink, shared by every public entry
 # point (per_sink_counts, pipeline.run, run_resumable lineage/counts)
@@ -47,18 +48,31 @@ def route_partition(df: DataFrame, cfg: PipelineConfig,
       ONE task, so the within-partition sort yields contiguous, ordered
       conversation runs in every output file.
     """
-    salt = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.salt_buckets))
+    salt, keys, order = _route_exprs(cfg.salt_buckets, route_column)
+    df = df.withColumn("_salt", salt).repartition(*keys)
+    return df.sortWithinPartitions(*order).drop("_salt")
+
+
+@JvmMemo
+def _route_exprs(salt_buckets: int, route_column: str
+                 ) -> tuple[Column, list[Column], list[Column]]:
+    """(salt, repartition keys, within-partition order) for route_partition."""
+    salt = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(salt_buckets))
     key = F.coalesce(F.col(route_column), F.lit("__null__"))
-    df = df.withColumn("_salt", salt).repartition(key, F.col("_salt"))
-    return df.sortWithinPartitions(route_column, "conv_id", "turn_idx").drop("_salt")
+    order = [F.col(c) for c in (route_column, "conv_id", "turn_idx")]
+    return salt, [key, F.col("_salt")], order
 
 
 def stable_order(df: DataFrame) -> DataFrame:
     """Logical per-conversation ordering: turn_seq = row_number over
     (conv_id ordered by turn_idx). Deterministic regardless of physical
     placement/salting (SURVEY.md section 7.4 item 4)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_seq", F.row_number().over(w))
+    return df.withColumn("turn_seq", _turn_seq())
+
+
+@JvmMemo
+def _turn_seq() -> Column:
+    return F.row_number().over(Window.partitionBy("conv_id").orderBy("turn_idx"))
 
 
 def per_sink_counts(df: DataFrame, route_column: str = "namespace_name") -> DataFrame:
